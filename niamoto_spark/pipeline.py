@@ -7,10 +7,12 @@ import -> transform -> export.  This module is the Spark-side equivalent:
 - ``run_import``: file/derived connectors -> parquet tables in a warehouse
   dir + an EntityRegistry (the reference's DuckDB tables + registry rows).
 - ``run_transform``: for each group config, ONE loader join per source and
-  ONE aggregate per widget computes every entity at once, then the widget
-  frames are packed to JSON columns in a wide per-group result table —
-  the same table shape the reference builds row-by-row
-  (transformer.py:1142-1186), minus the O(entities x widgets) query loop.
+  ONE aggregate per widget computes every entity at once.  Each widget
+  emits long-form ``(gid, widget name, JSON)`` rows; the rows of all
+  widgets are unioned and pivoted by ONE ``groupBy(gid)`` into the wide
+  per-group result table, left-joined once onto the group ids — the same
+  table shape the reference builds row-by-row (transformer.py:1142-1186),
+  minus the O(entities x widgets) query loop.
 - ``run_export``: JSON static API per group (exporters/json_api.py).
 
 Widget param adapters accept the reference's YAML parameter names verbatim
@@ -20,7 +22,10 @@ transform.yml runs unchanged against this engine.
 
 from __future__ import annotations
 
+import json
 import os
+import re
+from functools import reduce
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -48,34 +53,107 @@ SINGLE_ROW_WIDGETS = {
 
 
 
+def _ref_key(ref: str) -> str:
+    """The step key an "@step.sub.path" chain reference names."""
+    return ref[1:].split(".", 1)[0]
+
+
 def _resolve_chain_ref(ref: str, docs: dict):
     """Resolve an "@step.field.sub[0]" chain reference against computed
     per-entity step docs — the reference ReferenceResolver's dotted +
-    indexed grammar (reference_resolver.py:53-67); ``|function`` pipes
-    are not supported here (KeyError -> the step emits NULL).  Raises
-    KeyError when any segment is missing."""
-    import re as _re
-
-    body = ref[1:]
-    if "|" in body:
-        raise KeyError(ref)
-    parts = body.split(".")
+    indexed grammar (reference_resolver.py:53-67).  A segment that is
+    itself a key of the current dict is taken whole; otherwise a
+    trailing ``[i]`` run indexes into lists.  ``|function`` pipes are
+    not supported (no key matches them).  Raises KeyError when any
+    segment is missing."""
+    parts = ref[1:].split(".")
     if parts[0] not in docs:
         raise KeyError(ref)
     cur = docs[parts[0]]
     for seg in parts[1:]:
-        m = _re.match(r"([A-Za-z0-9_]+)((?:\[\d+\])*)$", seg)
-        if not m:
+        if isinstance(cur, dict) and seg in cur:
+            cur = cur[seg]
+            continue
+        m = re.fullmatch(r"(.+?)((?:\[\d+\])+)", seg)
+        if not (m and isinstance(cur, dict) and m.group(1) in cur):
             raise KeyError(ref)
-        name, idx = m.group(1), m.group(2)
-        if not (isinstance(cur, dict) and name in cur):
-            raise KeyError(ref)
-        cur = cur[name]
-        for i in _re.findall(r"\[(\d+)\]", idx or ""):
+        cur = cur[m.group(1)]
+        for i in re.findall(r"\[(\d+)\]", m.group(2)):
             if not isinstance(cur, list) or int(i) >= len(cur):
                 raise KeyError(ref)
             cur = cur[int(i)]
     return cur
+
+
+def _materialize_refs(v, docs: dict):
+    """Replace every "@..." string in a params tree by the chain doc it
+    resolves to."""
+    if isinstance(v, str) and v.startswith("@"):
+        return _resolve_chain_ref(v, docs)
+    if isinstance(v, dict):
+        return {k: _materialize_refs(x, docs) for k, x in v.items()}
+    if isinstance(v, list):
+        return [_materialize_refs(x, docs) for x in v]
+    return v
+
+
+def _series_op(op: str, params: dict, step_params: dict):
+    """(kernel, kwargs) of a peak_detection / active_periods chain step
+    (reference custom_calculator.py :1299 / :1421).  A "@step..."
+    ``labels`` ref takes that earlier step's configured labels."""
+    from niamoto_spark.operators.ecological import (active_periods_dict,
+                                                    peak_detection_dict)
+
+    if op == "peak_detection":
+        return peak_detection_dict, {
+            "threshold": params.get("threshold"),
+            "min_distance": int(params.get("min_distance", 1)),
+            "prominence": float(params.get("prominence", 0.0))}
+    labels = params.get("labels")
+    if isinstance(labels, str) and labels.startswith("@"):
+        labels = step_params.get(_ref_key(labels), {}).get("labels")
+    return active_periods_dict, {
+        "threshold": float(params.get("threshold", 0.0)),
+        "min_duration": int(params.get("min_duration", 1)),
+        "labels": labels}
+
+
+def _formula_refs(params: dict) -> tuple[list, list]:
+    """Parse a chain custom_formula dict literal ``{'k': var, ...}`` into
+    ``([(k, "@ref")], [(variable, "@ref")])``: the merged value's
+    entries and the ``variables`` echo of the reference's
+    _custom_formula envelope (custom_calculator.py:1649-1654).  Raises
+    ValueError (or KeyError / SyntaxError) for any other formula."""
+    import ast
+
+    tree = ast.parse(params["formula"], mode="eval").body
+    if not isinstance(tree, ast.Dict):
+        raise ValueError(
+            "chain custom_formula supports dict literals of variables here")
+    variables = params.get("variables", {})
+    entries = []
+    for k, v in zip(tree.keys, tree.values):
+        if not isinstance(k, ast.Constant) or not isinstance(v, ast.Name):
+            raise ValueError("dict formula entries must be "
+                             "'literal': variable")
+        ref = variables.get(v.id, f"@{v.id}")
+        if not (isinstance(ref, str) and ref.startswith("@")):
+            raise ValueError(f"formula variable {v.id!r} must be an "
+                             "@step reference")
+        entries.append((k.value, ref))
+    echo = [(name, ref) for name, ref in variables.items()
+            if isinstance(ref, str) and ref.startswith("@")]
+    return entries, echo
+
+
+def _full_join_docs(frames: list, gid: str) -> DataFrame | None:
+    """Full-join ``(gid, __json)`` frames on gid, each ``__json`` renamed
+    to its given column name: ``frames`` is ``[(column, frame)]``."""
+    joined = None
+    for col, frame in frames:
+        frame = frame.withColumnRenamed("__json", col)
+        joined = frame if joined is None else joined.join(frame, gid, "full")
+    return joined
 
 
 class Pipeline:
@@ -357,11 +435,14 @@ class Pipeline:
                 raise ValueError(f"unknown relation plugin {plugin!r}")
             tagged[src.name] = out
 
-        # 2. widgets: one aggregate each, packed to a JSON column
+        # 2. widgets: one aggregate each, emitted long-form as
+        # (gid, __w = widget name, __json) and packed into the wide group
+        # table by ONE pivot aggregate — not one join per widget
         from niamoto_spark import refshapes as RS
-        result = grouping.select(F.col(gid))
-        if only_ids is not None:
-            result = result.where(F.col(gid).isin(list(only_ids)))
+        gid_type = grouping.schema[gid].dataType
+        frames: list[DataFrame] = []
+        names: list[str] = []
+        cols: list = []
         for name, w in g.widgets_data.items():
             try:
                 jdf = self._widget_json(w.plugin, dict(w.params), tagged,
@@ -373,8 +454,11 @@ class Pipeline:
                 self.warnings.append(
                     f"widget {g.group_by}.{name} ({w.plugin}): {e}")
                 continue
-            result = result.join(jdf.withColumnRenamed("__json", name),
-                                 gid, "left")
+            frames.append(jdf.select(F.col(gid).cast(gid_type).alias(gid),
+                                     F.lit(name).alias("__w"),
+                                     F.col("__json")))
+            col = F.col(f"__c{len(names)}")
+            names.append(name)
             # zero-occurrence entities: the reference's per-entity loop
             # runs EVERY widget on every taxonomy node and empty frames
             # take the plugins' empty branches — engine aggregates emit
@@ -384,8 +468,17 @@ class Pipeline:
                 if w.plugin == "transform_chain" \
                 else RS.empty_widget_json(w.plugin, dict(w.params))
             if empty is not None:
-                result = result.withColumn(
-                    name, F.coalesce(F.col(name), F.lit(empty)))
+                col = F.coalesce(col, F.lit(empty))
+            cols.append(col.alias(name))
+        result = grouping.select(F.col(gid))
+        if only_ids is not None:
+            result = result.where(F.col(gid).isin(list(only_ids)))
+        if frames:
+            wide = reduce(DataFrame.unionByName, frames).groupBy(gid).agg(
+                *[F.max(F.when(F.col("__w") == name, F.col("__json")))
+                  .alias(f"__c{i}") for i, name in enumerate(names)])
+            result = result.join(wide, gid, "left")
+        result = result.select(F.col(gid), *cols)
         out_path = os.path.join(self.warehouse, f"{g.group_by}_results.parquet")
         if mode == "incremental":
             from niamoto_spark.sources.sinks import upsert_table
@@ -444,6 +537,16 @@ class Pipeline:
             return self._shape_processor_widget(df if df is not None
                                                 else grouping, gid, params)
 
+        return self._run_shaped(plugin, params, tagged, group_by, gid)[1]
+
+    def _run_shaped(self, plugin: str, params: dict, tagged: dict,
+                    group_by: str, gid: str) -> tuple[DataFrame, DataFrame]:
+        """Run one widget's operator over the tagged frames and shape its
+        output into the reference's JSON: returns (operator frame,
+        (gid, __json) frame).  Top-level widgets and transform_chain
+        steps both go through here."""
+        from niamoto_spark import refshapes as RS
+
         run_params = dict(params)
         if plugin == "direct_attribute":
             # the shaper below applies clip + precision itself — it
@@ -454,33 +557,29 @@ class Pipeline:
             run_params.pop("max_value", None)
             run_params.pop("precision", None)
         wdf = self._run_widget(plugin, run_params, tagged, group_by, gid)
-        if plugin == "transform_chain" and "__cc" in wdf.columns:
-            return wdf.select(F.col(gid),
-                              F.col("__cc").alias("__json"))
-        if plugin == "statistical_summary":
-            return RS.statistical_summary(wdf, gid, params)
-        if plugin == "binned_distribution":
-            return RS.binned_distribution(wdf, gid, params)
-        if plugin == "categorical_distribution":
-            return RS.categorical_distribution(wdf, gid, params)
-        if plugin == "binary_counter":
-            return RS.binary_counter(wdf, gid, params)
-        if plugin == "top_ranking":
-            return RS.top_ranking(wdf, gid, params)
-        if plugin == "field_aggregator":
-            return RS.field_aggregator(wdf, gid, params)
-        if plugin == "time_series_analysis":
-            return RS.time_series_analysis(wdf, gid, params)
-        if plugin == "multi_column_extractor":
-            return RS.multi_column_extractor(wdf, gid, params)
+        if plugin == "transform_chain":
+            return wdf, wdf.select(F.col(gid), F.col("__cc").alias("__json"))
+        shaper = {
+            "statistical_summary": RS.statistical_summary,
+            "binned_distribution": RS.binned_distribution,
+            "categorical_distribution": RS.categorical_distribution,
+            "binary_counter": RS.binary_counter,
+            "top_ranking": RS.top_ranking,
+            "field_aggregator": RS.field_aggregator,
+            "time_series_analysis": RS.time_series_analysis,
+            "multi_column_extractor": RS.multi_column_extractor,
+        }.get(plugin)
+        if shaper is not None:
+            return wdf, shaper(wdf, gid, params)
         if plugin == "direct_attribute":
+            src = tagged.get(params.get("source"))
             field = params["field"]
-            is_float = bool(df is not None and field in df.columns and
-                            dict(df.dtypes).get(field) in
-                            ("double", "float"))
-            return RS.direct_attribute(wdf, gid, params, is_float)
-        return self._pack_json(wdf, gid, "__json",
-                               single_row=plugin in SINGLE_ROW_WIDGETS)
+            is_float = bool(src is not None and field in src.columns
+                            and dict(src.dtypes).get(field)
+                            in ("double", "float"))
+            return wdf, RS.direct_attribute(wdf, gid, params, is_float)
+        return wdf, self._pack_json(wdf, gid,
+                                    single_row=plugin in SINGLE_ROW_WIDGETS)
 
     def _empty_chain_json(self, params: dict) -> str | None:
         """transform_chain empty-entity envelope: the reference runs the
@@ -490,11 +589,8 @@ class Pipeline:
         uses at scale (deterministic over the zero series), and a dict
         custom_formula composes prior keys.  Returns None when a step
         cannot be statically evaluated (the widget stays NULL there)."""
-        import json as _json
-
         from niamoto_spark import refshapes as RS
-        from niamoto_spark.operators.ecological import (
-            active_periods_dict, peak_detection_dict)
+        from niamoto_spark.operators.ecological import CC_PURE_OPS, cc_pure_op
 
         doc: dict[str, Any] = {}
         step_params: dict[str, dict] = {}
@@ -502,142 +598,45 @@ class Pipeline:
         for step in params.get("steps") or []:
             sp_ = dict(step.get("params") or {})
             key = step.get("output_key")
-            if step.get("plugin") == "time_series_analysis":
-                txt = RS.empty_widget_json("time_series_analysis", sp_)
-                doc[key] = _json.loads(txt)
-                series_names = list(sp_.get("fields") or {})
-            elif step.get("plugin") == "custom_calculator":
-                op = sp_.get("operation")
-                series = {k: [0.0] * 12 for k in series_names}
-                if op == "peak_detection":
-                    doc[key] = peak_detection_dict(
-                        series, threshold=sp_.get("threshold"),
-                        min_distance=int(sp_.get("min_distance", 1)),
-                        prominence=float(sp_.get("prominence", 0.0)))
-                elif op == "active_periods":
-                    labels = sp_.get("labels")
-                    if isinstance(labels, str) and labels.startswith("@"):
-                        src_key = labels[1:].split(".", 1)[0]
-                        labels = step_params.get(src_key, {}).get("labels")
-                    doc[key] = active_periods_dict(
-                        series,
-                        threshold=float(sp_.get("threshold", 0.0)),
-                        min_duration=int(sp_.get("min_duration", 1)),
-                        labels=labels)
+            op = sp_.get("operation")
+            try:
+                if step.get("plugin") == "time_series_analysis":
+                    doc[key] = json.loads(RS.empty_widget_json(
+                        "time_series_analysis", sp_))
+                    series_names = list(sp_.get("fields") or {})
+                elif step.get("plugin") != "custom_calculator":
+                    return None
+                elif op in ("peak_detection", "active_periods"):
+                    fn, kwargs = _series_op(op, sp_, step_params)
+                    doc[key] = fn({k: [0.0] * 12 for k in series_names},
+                                  **kwargs)
                 elif op == "custom_formula":
-                    import ast
-                    try:
-                        tree = ast.parse(sp_["formula"], mode="eval").body
-                    except (KeyError, SyntaxError):
-                        return None
-                    if not isinstance(tree, ast.Dict):
-                        return None
-                    variables = sp_.get("variables", {})
-
-                    def _resolve_ref(ref):
-                        # "@key.sub.path" -> the dotted lookup into the
-                        # already-computed doc (the reference's
-                        # ReferenceResolver resolves subpaths the same
-                        # way); sentinel KeyError when unresolvable
-                        path = ref[1:].split(".")
-                        if path[0] not in doc:
-                            raise KeyError(ref)
-                        cur = doc[path[0]]
-                        for p in path[1:]:
-                            if not (isinstance(cur, dict) and p in cur):
-                                raise KeyError(ref)
-                            cur = cur[p]
-                        return cur
-
-                    merged = {}
-                    try:
-                        for k, v in zip(tree.keys, tree.values):
-                            if not isinstance(k, ast.Constant) or \
-                                    not isinstance(v, ast.Name):
-                                return None
-                            ref = variables.get(v.id, f"@{v.id}")
-                            if not (isinstance(ref, str)
-                                    and ref.startswith("@")):
-                                return None
-                            merged[k.value] = _resolve_ref(ref)
-                        resolved_vars = {
-                            vn: _resolve_ref(r) for vn, r in
-                            variables.items()
-                            if isinstance(r, str) and r.startswith("@")}
-                    except KeyError:
-                        return None
+                    entries, echo = _formula_refs(sp_)
                     # the reference's _custom_formula envelope
                     # (custom_calculator.py:1649-1654)
                     doc[key] = {
-                        "value": merged,
+                        "value": {k: _resolve_chain_ref(r, doc)
+                                  for k, r in entries},
                         "formula": sp_["formula"],
                         "description": sp_.get("description",
                                                "Custom formula"),
-                        "variables": resolved_vars,
+                        "variables": {n: _resolve_chain_ref(r, doc)
+                                      for n, r in echo},
                     }
-                else:
-                    from niamoto_spark.operators.ecological import (
-                        CC_PURE_OPS, cc_pure_op)
-                    if op not in CC_PURE_OPS:
-                        return None
+                elif op in CC_PURE_OPS:
                     # pure op over the zero-series docs computed so far
-
-                    def _mat(v):
-                        if isinstance(v, str) and v.startswith("@"):
-                            return _resolve_chain_ref(v, doc)
-                        if isinstance(v, dict):
-                            return {k2: _mat(x) for k2, x in v.items()}
-                        if isinstance(v, list):
-                            return [_mat(x) for x in v]
-                        return v
-
-                    try:
-                        doc[key] = cc_pure_op(
-                            op, {k2: _mat(v) for k2, v in sp_.items()
-                                 if k2 not in ("operation", "source")})
-                    except (KeyError, ValueError, TypeError):
-                        return None
-            else:
+                    doc[key] = cc_pure_op(op, _materialize_refs(
+                        {k: v for k, v in sp_.items()
+                         if k not in ("operation", "source")}, doc))
+                else:
+                    return None
+            except (KeyError, ValueError, TypeError, SyntaxError):
                 return None
             step_params[key] = sp_
-        return _json.dumps(doc, ensure_ascii=False) if doc else None
-
-    def _shape_chain_step(self, plugin: str, params: dict,
-                          wdf: DataFrame, bindings: dict,
-                          gid: str) -> DataFrame:
-        """Reference-shape ONE chain step's operator output (the same
-        dispatch _widget_json applies after _run_widget) — each step's
-        JSON joins the chain envelope under its output_key."""
-        from niamoto_spark import refshapes as RS
-
-        if plugin == "statistical_summary":
-            return RS.statistical_summary(wdf, gid, params)
-        if plugin == "binned_distribution":
-            return RS.binned_distribution(wdf, gid, params)
-        if plugin == "categorical_distribution":
-            return RS.categorical_distribution(wdf, gid, params)
-        if plugin == "binary_counter":
-            return RS.binary_counter(wdf, gid, params)
-        if plugin == "top_ranking":
-            return RS.top_ranking(wdf, gid, params)
-        if plugin == "field_aggregator":
-            return RS.field_aggregator(wdf, gid, params)
-        if plugin == "time_series_analysis":
-            return RS.time_series_analysis(wdf, gid, params)
-        if plugin == "multi_column_extractor":
-            return RS.multi_column_extractor(wdf, gid, params)
-        if plugin == "direct_attribute":
-            src = bindings.get(params.get("source"))
-            field = params.get("field")
-            is_float = bool(src is not None and field in src.columns
-                            and dict(src.dtypes).get(field)
-                            in ("double", "float"))
-            return RS.direct_attribute(wdf, gid, params, is_float)
-        return self._pack_json(wdf, gid, "__json",
-                               single_row=plugin in SINGLE_ROW_WIDGETS)
+        return json.dumps(doc, ensure_ascii=False) if doc else None
 
     def _custom_calculator_step(self, params: dict, bindings: dict,
-                                binding_params: dict,
+                                binding_params: dict, docs: dict,
                                 gid: str) -> DataFrame:
         """custom_calculator inside transform_chain — the phenology-style
         per-entity time-series ops (reference custom_calculator.py
@@ -647,23 +646,20 @@ class Pipeline:
         on the example transform.yml this engine is a strict SUPERSET:
         the chain runs here and errors there.
 
+        ``bindings`` holds each earlier step's operator frame and
+        ``docs`` its shaped ``(gid, __json)`` frame, by output_key.
         Per-entity series are one year of months; the ops run per Arrow
         batch via mapInPandas (no row-at-a-time UDFs)."""
-        import ast
-        import json as _json
-
         import pandas as pd
 
-        from niamoto_spark.operators.ecological import (active_periods_dict,
-                                                        peak_detection_dict)
-
-        def _resolve_key(ref: str) -> str:
-            return ref[1:].split(".", 1)[0]
+        def bind(keys):
+            # the named steps' docs side by side, as __cc_<key> columns
+            return _full_join_docs([(f"__cc_{k}", docs[k]) for k in keys],
+                                   gid)
 
         op = params.get("operation")
         if op in ("peak_detection", "active_periods"):
-            key = _resolve_key(params["time_series"])
-            ts = bindings[key]
+            ts = bindings[_ref_key(params["time_series"])]
             series_cols = [c for c in ts.columns if c.endswith("_pct")]
             aggs = []
             for s in series_cols:
@@ -672,22 +668,7 @@ class Pipeline:
                 aggs.append(F.array(*[F.coalesce(m[F.lit(i)], F.lit(0.0))
                                       for i in range(1, 13)]).alias(s))
             agg = ts.groupBy(gid).agg(*aggs)
-            labels = params.get("labels")
-            if isinstance(labels, str) and labels.startswith("@"):
-                labels = binding_params.get(_resolve_key(labels), {}) \
-                    .get("labels")
-            kwargs: dict[str, Any]
-            if op == "peak_detection":
-                kwargs = {"threshold": params.get("threshold"),
-                          "min_distance": int(params.get("min_distance", 1)),
-                          "prominence": float(params.get("prominence", 0.0))}
-                fn = peak_detection_dict
-            else:
-                kwargs = {"threshold": float(params.get("threshold", 0.0)),
-                          "min_duration": int(params.get("min_duration", 1)),
-                          "labels": labels}
-                fn = active_periods_dict
-
+            fn, kwargs = _series_op(op, params, binding_params)
             gid_type = dict(agg.dtypes)[gid]
 
             def run(batches):
@@ -698,7 +679,7 @@ class Pipeline:
                                                     for v in row[s]]
                                   for s in series_cols}
                         rows.append((row[gid],
-                                     _json.dumps(fn(series, **kwargs))))
+                                     json.dumps(fn(series, **kwargs))))
                     yield pd.DataFrame(rows, columns=[gid, "__cc"])
 
             return agg.mapInPandas(run,
@@ -713,46 +694,16 @@ class Pipeline:
             # concatenation of the bound steps' per-entity JSON payloads.
             # Subpath refs ("@key.subpath") bind the whole doc — the
             # example config and grid variants only use whole-doc refs.
-            tree = ast.parse(params["formula"], mode="eval").body
-            if not isinstance(tree, ast.Dict):
-                raise ValueError(
-                    "chain custom_formula supports dict literals of "
-                    "variables here")
-            variables = params.get("variables", {})
-            entries: list[tuple[str, str]] = []   # value-dict (key, src)
-            for k, v in zip(tree.keys, tree.values):
-                if not isinstance(k, ast.Constant) or \
-                        not isinstance(v, ast.Name):
-                    raise ValueError("dict formula entries must be "
-                                     "'literal': variable")
-                ref = variables.get(v.id, f"@{v.id}")
-                entries.append((k.value, _resolve_key(ref)))
-            var_entries: list[tuple[str, str]] = []  # echo (name, src)
-            for vname, ref in variables.items():
-                if isinstance(ref, str) and ref.startswith("@"):
-                    var_entries.append((vname, _resolve_key(ref)))
-
-            joined, cols = None, {}
-            for key in dict.fromkeys(
-                    [s for _, s in entries] + [s for _, s in var_entries]):
-                frame = bindings[key]
-                if "__cc" in frame.columns:
-                    frame = frame.withColumnRenamed("__cc", f"__cc_{key}")
-                else:
-                    # a time-series frame: emit its reference JSON shape
-                    from niamoto_spark import refshapes as RS
-                    frame = RS.time_series_analysis(
-                        frame, gid, binding_params.get(key, {})) \
-                        .withColumnRenamed("__json", f"__cc_{key}")
-                cols[key] = F.col(f"__cc_{key}")
-                joined = frame if joined is None \
-                    else joined.join(frame, gid, "full")
+            entries, echo = _formula_refs(params)
+            joined = bind(dict.fromkeys(_ref_key(r)
+                                        for _, r in entries + echo))
 
             def _obj(pairs):
                 ps: list = []
-                for jk, sk in pairs:
-                    ps.append(F.lit(f'{_json.dumps(jk)}: '))
-                    ps.append(F.coalesce(cols[sk], F.lit("null")))
+                for jk, ref in pairs:
+                    ps.append(F.lit(f'{json.dumps(jk)}: '))
+                    ps.append(F.coalesce(F.col(f"__cc_{_ref_key(ref)}"),
+                                         F.lit("null")))
                     ps.append(F.lit(", "))
                 return ([F.lit("{")] + ps[:-1] + [F.lit("}")]) if ps \
                     else [F.lit("{}")]
@@ -760,10 +711,10 @@ class Pipeline:
             desc = params.get("description", "Custom formula")
             parts = ([F.lit('{"value": ')] + _obj(entries)
                      + [F.lit(f', "formula": '
-                              f'{_json.dumps(params["formula"])}, '
-                              f'"description": {_json.dumps(desc)}, '
+                              f'{json.dumps(params["formula"])}, '
+                              f'"description": {json.dumps(desc)}, '
                               f'"variables": ')]
-                     + _obj(var_entries) + [F.lit("}")])
+                     + _obj(echo) + [F.lit("}")])
             return joined.select(F.col(gid), F.concat(*parts).alias("__cc"))
 
         from niamoto_spark.operators.ecological import (CC_PURE_OPS,
@@ -789,53 +740,27 @@ class Pipeline:
             op_params = {k: v for k, v in params.items()
                          if k not in ("operation", "source")}
             _walk(op_params)
-            src_keys = list(dict.fromkeys(_resolve_key(r) for r in refs))
-            joined = None
-            for skey in src_keys:
-                frame = bindings[skey]
-                if "__cc" in frame.columns:
-                    frame = frame.withColumnRenamed("__cc",
-                                                    f"__cc_{skey}")
-                else:
-                    from niamoto_spark import refshapes as RS
-                    frame = RS.time_series_analysis(
-                        frame, gid, binding_params.get(skey, {}))                         .withColumnRenamed("__json", f"__cc_{skey}")
-                joined = frame if joined is None                     else joined.join(frame, gid, "full")
-            if joined is None:
+            src_keys = list(dict.fromkeys(_ref_key(r) for r in refs))
+            if not src_keys:
                 raise ValueError(
                     f"chain {op} step has no @step references")
+            joined = bind(src_keys)
             gid_type = dict(joined.dtypes)[gid]
-            keys_ = list(src_keys)
 
             def run_pure(batches):
                 for pdf in batches:
                     rows = []
                     for _, row in pdf.iterrows():
-                        docs, ok = {}, True
-                        for skey in keys_:
-                            txt = row[f"__cc_{skey}"]
-                            if not isinstance(txt, str):
-                                ok = False
-                                break
-                            docs[skey] = _json.loads(txt)
-                        if not ok:
+                        texts = [row[f"__cc_{k}"] for k in src_keys]
+                        if not all(isinstance(t, str) for t in texts):
                             rows.append((row[gid], None))
                             continue
-
-                        def mat(v):
-                            if isinstance(v, str) and v.startswith("@"):
-                                return _resolve_chain_ref(v, docs)
-                            if isinstance(v, dict):
-                                return {k2: mat(x) for k2, x in v.items()}
-                            if isinstance(v, list):
-                                return [mat(x) for x in v]
-                            return v
-
+                        docs_ = {k: json.loads(t)
+                                 for k, t in zip(src_keys, texts)}
                         try:
                             out_doc = cc_pure_op(
-                                op, {k2: mat(v) for k2, v
-                                     in op_params.items()})
-                            rows.append((row[gid], _json.dumps(
+                                op, _materialize_refs(op_params, docs_))
+                            rows.append((row[gid], json.dumps(
                                 out_doc, ensure_ascii=False)))
                         except (KeyError, ValueError, TypeError):
                             rows.append((row[gid], None))
@@ -871,7 +796,6 @@ class Pipeline:
           SKIPPED (engine divergence: the reference raises and loses
           the whole widget — skipping is strictly more useful and the
           refdiff synth always provides the layer)."""
-        import json as _json
 
         from niamoto_spark.operators.overlay import (nested_to_geojson,
                                                      nested_to_topojson)
@@ -947,7 +871,7 @@ class Pipeline:
                             continue
                         merged = simplify_with_utm_nested(parts)
                         doc[f"{name}_coords"] = _encode(merged)
-                    rows.append((row[gid], _json.dumps(doc)))
+                    rows.append((row[gid], json.dumps(doc)))
                 yield pd.DataFrame(rows, columns=[gid, "__json"])
 
         return base.mapInPandas(run,
@@ -970,8 +894,6 @@ class Pipeline:
             # step's.  Found by the r13 chain-variant differential: the
             # first config the reference could actually execute showed
             # the engine emitting only the tail.
-            import json as _json
-
             bindings = dict(tagged)
             binding_params: dict[str, dict] = {}
             shaped: list[tuple[str, DataFrame]] = []
@@ -982,30 +904,23 @@ class Pipeline:
                     sparams["source"] = src[1:]
                 if step["plugin"] == "custom_calculator":
                     out = self._custom_calculator_step(
-                        sparams, bindings, binding_params, gid)
+                        sparams, bindings, binding_params, dict(shaped),
+                        gid)
                     jf = out.select(F.col(gid),
                                     F.col("__cc").alias("__json"))
                 else:
-                    run_params = dict(sparams)
-                    if step["plugin"] == "direct_attribute":
-                        run_params.pop("max_value", None)
-                        run_params.pop("precision", None)
-                    out = self._run_widget(step["plugin"], run_params,
-                                           bindings, group_by, gid)
-                    jf = self._shape_chain_step(step["plugin"], sparams,
-                                                out, bindings, gid)
+                    out, jf = self._run_shaped(step["plugin"], sparams,
+                                               bindings, group_by, gid)
                 bindings[step["output_key"]] = out
                 binding_params[step["output_key"]] = sparams
                 shaped.append((step["output_key"], jf))
             assert shaped, "empty transform_chain"
-            joined = None
+            joined = _full_join_docs(
+                [(f"__j{i}", jf) for i, (_, jf) in enumerate(shaped)], gid)
             parts: list = [F.lit("{")]
-            for i, (key, jf) in enumerate(shaped):
-                jf = jf.withColumnRenamed("__json", f"__j{i}")
-                joined = jf if joined is None \
-                    else joined.join(jf, gid, "full")
+            for i, (key, _) in enumerate(shaped):
                 parts.append(F.lit(("," if i else "")
-                                   + _json.dumps(key) + ": "))
+                                   + json.dumps(key) + ": "))
                 parts.append(F.coalesce(F.col(f"__j{i}"), F.lit("null")))
             parts.append(F.lit("}"))
             return joined.select(F.col(gid),
@@ -1182,7 +1097,7 @@ class Pipeline:
             result = result.withColumn(t, F.coalesce(F.col(t), F.lit(0)))
         return result
 
-    def _pack_json(self, wdf: DataFrame, gid: str, name: str,
+    def _pack_json(self, wdf: DataFrame, gid: str,
                    single_row: bool = False) -> DataFrame:
         """One JSON column per widget.  The shape is decided by the widget
         KIND (SINGLE_ROW_WIDGETS -> object, everything else -> array), never
@@ -1200,7 +1115,7 @@ class Pipeline:
                        .alias("__rows")))
         json_col = F.to_json(F.col("__rows")[0]) if single_row \
             else F.to_json(F.col("__rows"))
-        return packed.select(F.col(gid), json_col.alias(name))
+        return packed.select(F.col(gid), json_col.alias("__json"))
 
     # ------------------------------------------------------------------
     # export phase

@@ -106,6 +106,17 @@ def test_top_ranking_name_enrichment(spark):
     assert {r["item"] for r in rows} == {"Araucaria", "Agathis"}
 
 
+def test_top_ranking_weight_col_needs_count(spark):
+    df = spark.createDataFrame(pd.DataFrame(
+        {"f": ["a", "b"], "w": [3, 1], "v": [1.0, 2.0]}))
+    rows = agg.top_ranking(df, [], "f", weight_col="w").collect()
+    assert {(r["item"], r["value"]) for r in rows} == {("a", 3), ("b", 1)}
+    for how in ("sum", "avg"):
+        with pytest.raises(ValueError, match="weight_col.*agg"):
+            agg.top_ranking(df, [], "f", agg=how, value_field="v",
+                            weight_col="w")
+
+
 def test_field_aggregator_multi_source(spark):
     a = spark.createDataFrame(pd.DataFrame({"v": [1.0, 2.0, 3.0]}))
     b = spark.createDataFrame(pd.DataFrame(

@@ -506,3 +506,93 @@ def test_transform_adjacency_reference_dialect(project, spark):
     assert fam2["mean"] is None and fam2["max"] is None
     sp2 = json.loads(rows2[taxons["columnaris"]]["dbh_summary"])
     assert sp2 == sp
+
+
+def test_group_table_contract(spark, tmp_path):
+    """The wide group table: the group id, then one JSON column per
+    widget in config order; a widget that fails at plan-build time is
+    dropped from the table and named in ``warnings``; an entity with no
+    source rows takes each widget's empty literal; ``only_ids`` limits
+    the rows written."""
+    from niamoto_spark import refshapes as RS
+
+    OCCURRENCES.to_csv(tmp_path / "occurrences.csv", index=False)
+    plots = pd.concat([PLOTS, pd.DataFrame({
+        "id_plot": [3], "plot": ["Plot Three"], "locality": ["P3"],
+        "elevation": [50.0]})])
+    plots.to_csv(tmp_path / "plots.csv", index=False)
+    pipe = Pipeline(spark, warehouse=str(tmp_path / "warehouse"))
+    pipe.run_import({"version": "1.0", "entities": {
+        "datasets": {"occurrences": {
+            "connector": {"type": "file", "format": "csv",
+                          "path": "occurrences.csv"},
+            "schema": {"id_field": "id"}}},
+        "references": {"plots": {
+            "connector": {"type": "file", "format": "csv",
+                          "path": "plots.csv"},
+            "schema": {"id_field": "id_plot"}}},
+    }}, base_dir=str(tmp_path))
+    summary_p = {"source": "occurrences", "field": "dbh"}
+    bins_p = {"source": "occurrences", "field": "dbh", "bins": [0, 15, 30, 50]}
+    cfg = [{
+        "group_by": "plots",
+        "sources": [{
+            "name": "occurrences", "data": "occurrences", "grouping": "plots",
+            "relation": {"plugin": "direct_reference",
+                         "key": "plot_name", "ref_key": "locality"},
+        }],
+        "widgets_data": {
+            "dbh_summary": {"plugin": "statistical_summary",
+                            "params": summary_p},
+            # no bins: raises while the plan is built
+            "broken": {"plugin": "binned_distribution",
+                       "params": {"source": "occurrences", "field": "dbh"}},
+            "um_counter": {"plugin": "binary_counter",
+                           "params": {"source": "occurrences",
+                                      "field": "in_um"}},
+            "dbh_bins": {"plugin": "binned_distribution", "params": bins_p},
+        },
+    }]
+    out = pipe.run_transform(cfg)["plots"]
+    assert out.columns == ["id_plot", "dbh_summary", "um_counter",
+                           "dbh_bins"]
+    assert [w for w in pipe.warnings
+            if "plots.broken (binned_distribution)" in w]
+    rows = {r["id_plot"]: r for r in out.collect()}
+    assert set(rows) == {1, 2, 3}
+
+    p1 = OCCURRENCES[OCCURRENCES.plot_name == "P1"]["dbh"]
+    s1 = json.loads(rows[1]["dbh_summary"])
+    assert s1["mean"] == round(p1.mean(), 2)
+    assert s1["min"] == p1.min() and s1["max"] == p1.max()
+    p2 = OCCURRENCES[OCCURRENCES.plot_name == "P2"]
+    assert json.loads(rows[2]["um_counter"]) == {
+        "oui": int(p2["in_um"].sum()), "non": int((p2["in_um"] == 0).sum())}
+    bins2 = json.loads(rows[2]["dbh_bins"])
+    assert bins2["counts"] == [1, 4, 1]        # dense bins
+
+    assert rows[3]["dbh_summary"] == RS.empty_widget_json(
+        "statistical_summary", summary_p)
+    assert rows[3]["dbh_bins"] == RS.empty_widget_json(
+        "binned_distribution", bins_p)
+
+    pipe.run_transform(cfg, only_ids=[1, 3])
+    written = spark.read.parquet(
+        os.path.join(pipe.warehouse, "plots_results.parquet"))
+    assert sorted(r["id_plot"] for r in written.collect()) == [1, 3]
+
+
+def test_chain_ref_resolution():
+    """Chain refs resolve dotted keys of any spelling plus list indices;
+    a missing segment raises KeyError (the step then emits NULL)."""
+    from niamoto_spark.pipeline import _resolve_chain_ref
+
+    docs = {"raw": {"month_data": {"dbh-class 1": [0, 5, 7]},
+                    "labels": ["a", "b"]}}
+    assert _resolve_chain_ref("@raw.month_data.dbh-class 1[2]", docs) == 7
+    assert _resolve_chain_ref("@raw.month_data.dbh-class 1", docs) == [0, 5, 7]
+    assert _resolve_chain_ref("@raw.labels[1]", docs) == "b"
+    for bad in ("@raw.labels[2]", "@raw.nope", "@other", "@raw|sum",
+                "@raw.month_data[0]"):
+        with pytest.raises(KeyError):
+            _resolve_chain_ref(bad, docs)
